@@ -195,9 +195,9 @@ def test_vacuum_reclaims_old_files(store, spark, desc):
 
 
 def test_update_with_10k_distinct_times_plan_safe(store, spark, desc):
-    """Key routing must stay join-based: a 10k-key update routed through
-    isin() literal lists would bloat the plan tree; the semi-join form keeps
-    plan size O(1) in key count. 138 overwrites + 9,862 appends."""
+    """A 10k-step mixed update — 138 overwrites of every existing step plus
+    9,862 appends — commits as one version and reads back exactly: every
+    step once, every cell once."""
     times = daily("2021-09-16", 10_000)  # covers all 138 existing + bridges
     pdf = _tall(times, seed=7)
     update = spark.createDataFrame(pdf, schema=desc.schema())
@@ -206,6 +206,35 @@ def test_update_with_10k_distinct_times_plan_safe(store, spark, desc):
     ds = store.dataset()
     assert ds.count() == 10_000 * 16
     assert ds.select("time").distinct().count() == 10_000
+
+
+def test_update_routes_read_input_twice_and_keep_their_actions(store, spark, desc):
+    """A pure-insert update() evaluates its input frame twice: once in the
+    validator's aggregation and once in the staged write. The replaced
+    times and touched buckets come from the validator, so no third pass
+    collects them again. Each route commits one version under its own
+    action: insert, update (both legs) and append."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(t):
+        seen.add(1)
+        return t
+
+    # nondeterministic, so the optimizer cannot copy the UDF into the
+    # pushed-down NOT NULL filter: each count of a row is one pass
+    ident = F.udf(counted, desc.schema()["time"].dataType).asNondeterministic()
+    pdf = _tall(daily("2021-10-05", 3), seed=51)  # existing steps only
+    df = spark.createDataFrame(pdf, schema=desc.schema())
+    assert store.update(df.withColumn("time", ident("time"))) == {"inserts": 3, "appends": 0}
+    assert seen.value == 2 * len(pdf)
+
+    mixed = daily("2022-01-30", 4)  # two existing steps, two appends
+    store.update(spark.createDataFrame(_tall(mixed, seed=52), schema=desc.schema()))
+    appended = daily("2022-02-03", 2)
+    store.update(spark.createDataFrame(_tall(appended, seed=53), schema=desc.schema()))
+    actions = [e["action"] for e in store.versions()]
+    assert actions == ["initial", "insert", "update", "append"]
+    assert store.dataset().count() == (138 + 4) * 16
 
 
 def test_column_encoding_gardening_roundtrip(store):
@@ -353,9 +382,10 @@ def test_two_writer_race_no_lost_update(store, spark, desc):
 
 
 def test_append_conflict_retry_exhaustion_and_flag_hygiene(store, spark, desc, monkeypatch):
-    """max_retries=0 surfaces the conflict, and the update-in-progress flag
-    clears even on the failure path (a stuck True would wedge every later
-    update's guard)."""
+    """An append that loses every version race raises the commit-conflict
+    StoreError once its retry budget is spent, and the update-in-progress
+    flag clears even on that failure path (a stuck True would wedge every
+    later update's guard)."""
     df = spark.createDataFrame(_tall(daily("2022-05-01", 2), seed=41), schema=desc.schema())
     real_commit = GridStore._commit
 
@@ -365,7 +395,7 @@ def test_append_conflict_retry_exhaustion_and_flag_hygiene(store, spark, desc, m
 
     monkeypatch.setattr(GridStore, "_commit", always_conflict)
     with pytest.raises(StoreError, match="commit conflict"):
-        store.append(df, max_retries=0)
+        store.append(df)
     monkeypatch.undo()
     assert store.properties()["update_in_progress"] is False
     store.append(df)  # guard not wedged; append succeeds afterward

@@ -127,24 +127,17 @@ class UpdateValidation:
     # which would cost two extra Spark actions per update.
     n_inserts: int = 0
     n_appends: int = 0
-    # Max time of the APPEND leg (None when pure-insert) — store.update's
-    # mixed path anchors update_previous_end_date on it so the property
-    # matches what the old insert-commit-then-append-commit sequence left
-    # behind (the append commit wrote last). Same aggregation pass.
+    # Max time of the APPEND leg (None when pure-insert) — store.update
+    # anchors update_previous_end_date on it. Same aggregation pass.
     last_append: dt.datetime | None = None
     # Distinct storage buckets of the INSERT leg (only when the caller
-    # passed ``insert_bucket_fmt``) — store._update_mixed's touched-bucket
-    # set, folded into the same single aggregation instead of a second
-    # collect over the insert key frame (r15 store-latency consolidation:
-    # one fewer driver-synchronized action per mixed update).
+    # passed ``insert_bucket_fmt``) — the buckets store.update rewrites,
+    # folded into the same single aggregation instead of a second collect.
     insert_buckets: frozenset[str] | None = None
-    # Distinct time keys of the INSERT leg (only when the caller asked) —
-    # r16: store.update routes its legs by literal predicates on these
-    # instead of broadcast semi/anti-joins against the key FRAMES, whose
-    # subtrees (store scan + distinct + join) re-executed inside the
-    # staging write job. Bounded by the same argument as insert_buckets:
-    # an update batch's distinct time steps are bounded by construction.
-    insert_times: tuple | None = None
+    # Distinct time keys of the INSERT leg, sorted — the rows store.update
+    # replaces. Bounded like insert_buckets: an update batch's distinct
+    # time steps are bounded by construction.
+    insert_times: tuple[dt.datetime, ...] = ()
 
 
 def validate_update(
@@ -155,7 +148,6 @@ def validate_update(
     dataset_start: dt.datetime | None = None,
     cadence_bounds: tuple[dt.timedelta, dt.timedelta] | None = None,
     insert_bucket_fmt: str | None = None,
-    collect_insert_times: bool = False,
 ) -> UpdateValidation:
     """Pre-write guards, port of utils/publish.py:604-652 (Q5):
 
@@ -201,6 +193,7 @@ def validate_update(
             "offgrid"
         ),
         F.countDistinct(F.round("_k").cast("long")).alias("n_grid"),
+        F.collect_set(F.when(~is_app, F.col(time_dim))).alias("ins_times"),
     ]
     if insert_bucket_fmt is not None:
         # storage buckets of the insert leg — bounded by calendar arithmetic
@@ -209,10 +202,6 @@ def validate_update(
             F.collect_set(
                 F.when(~is_app, F.date_format(F.col(time_dim), insert_bucket_fmt))
             ).alias("ins_buckets")
-        )
-    if collect_insert_times:
-        aggs.append(
-            F.collect_set(F.when(~is_app, F.col(time_dim))).alias("ins_times")
         )
     stats_u = (
         u.join(F.broadcast(e.withColumn("_e", F.lit(1))), time_dim, "left")
@@ -269,7 +258,5 @@ def validate_update(
         insert_buckets=(
             frozenset(stats["ins_buckets"]) if insert_bucket_fmt is not None else None
         ),
-        insert_times=(
-            tuple(sorted(stats["ins_times"])) if collect_insert_times else None
-        ),
+        insert_times=tuple(sorted(stats["ins_times"])),
     )

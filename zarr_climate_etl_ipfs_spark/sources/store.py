@@ -44,13 +44,15 @@ role of Delta data skipping.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import hashlib
 import json
 import os
 import shutil
 import uuid
-from collections.abc import Mapping
+import warnings
+from collections.abc import Mapping, Sequence
 from pathlib import Path
 from typing import Any
 
@@ -62,6 +64,9 @@ from zarr_climate_etl_ipfs_spark.operators.updates import validate_update
 
 _BUCKET_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 _BUCKET_COL = "time_bucket"
+#: how often an append re-reads the latest manifest after losing the
+#: version race before it gives up with the commit-conflict StoreError
+_APPEND_RETRIES = 3
 
 
 def _sha256_file(p: Path) -> str:
@@ -140,13 +145,13 @@ class GridStore:
         """Commit ``files`` as version ``base_version + 1``.
 
         ``prev_end`` overrides the ``update_previous_end_date`` property
-        (default: the observed range's ``hi``). Mixed insert+append
-        updates pass the APPEND leg's max here so the property lands in
-        the same ``set_properties`` write as the rest of the commit
-        metadata — patching it afterwards left a crash window where the
-        whole-batch max (which can exceed the append leg's max when a
-        backfill append sits below an overwritten time) survived as
-        exactly the stale anchor the override exists to prevent.
+        (default: the observed range's ``hi``). :meth:`update` passes the
+        APPEND leg's max here so the property lands in the same
+        ``set_properties`` write as the rest of the commit metadata —
+        patching it afterwards left a crash window where the whole-batch
+        max (which can exceed the append leg's max when a backfill append
+        sits below an overwritten time) survived as exactly the stale
+        anchor the override exists to prevent.
 
         ``rng`` carries the update's ``lo``/``hi``/``n`` (time range + row
         count). Writers collect it via :meth:`_observe_rng` piggybacked on
@@ -280,6 +285,13 @@ class GridStore:
     def has_existing(self) -> bool:
         return self.current_version() > 0
 
+    def _read(self, files: list[str]) -> DataFrame:
+        """Exactly ``files`` (paths relative to ``data/``), bucket column
+        dropped — every reader resolves a manifest first and reads its list."""
+        paths = [str(self.data_path / f) for f in files]
+        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
+        return df.drop(_BUCKET_COL)
+
     def dataset(
         self, version: int | None = None, as_of: dt.datetime | None = None
     ) -> DataFrame:
@@ -291,10 +303,7 @@ class GridStore:
             if version is not None:
                 raise StoreError("dataset: pass version= or as_of=, not both")
             version = self.version_as_of(as_of)
-        m = self.manifest(version)
-        paths = [str(self.data_path / f) for f in m["files"]]
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
-        return df.drop(_BUCKET_COL)
+        return self._read(self.manifest(version)["files"])
 
     def time_sliced(self, start: dt.datetime, end: dt.datetime) -> DataFrame:
         """P1 time-slice with manifest-level bucket pruning: only files whose
@@ -304,16 +313,10 @@ class GridStore:
         fmt = _BUCKET_FMT[self.desc.time_bucket]
         py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
         lo, hi = start.strftime(py_fmt), end.strftime(py_fmt)
-        m = self.manifest()
-        paths = [
-            str(self.data_path / f)
-            for f in m["files"]
-            if lo <= _bucket_of(f) <= hi
-        ]
-        if not paths:
+        files = [f for f in self.manifest()["files"] if lo <= _bucket_of(f) <= hi]
+        if not files:
             return self.dataset().filter(F.lit(False))
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
-        return df.filter(F.col(td).between(F.lit(start), F.lit(end))).drop(_BUCKET_COL)
+        return self._read(files).filter(F.col(td).between(F.lit(start), F.lit(end)))
 
     def restore(self, version: int) -> int:
         """Delta RESTORE analog, completing the versioning triad with
@@ -334,16 +337,13 @@ class GridStore:
                 f"restore: {len(missing)} file(s) of v{version} were vacuumed "
                 f"(first: {missing[0]}); the version is no longer restorable"
             )
-        self._flag_update(True, append_only=False)
-        try:
+        with self._updating(append_only=False):
             v = self._commit(
                 "restore",
                 list(m["files"]),
                 self._rng_of(self.dataset(version)),
                 base_version=cur,
             )
-        finally:
-            self._flag_update(False, append_only=False)
         # The pre-commit existence check above races a concurrent
         # vacuum(retention=0) (TOCTOU): a reclaim can land between check and
         # commit, leaving the just-committed manifest with dangling
@@ -392,26 +392,18 @@ class GridStore:
         var = self.desc.data_var
         dims = [f.name for f in self.desc.schema().fields if f.name != var]
 
-        def _read(m: dict[str, Any]) -> DataFrame:
-            paths = [
-                str(self.data_path / f)
-                for f in m["files"]
-                if _bucket_of(f) in changed_buckets
-            ]
-            if not paths:
+        def changed(m: dict[str, Any]) -> DataFrame:
+            files = [f for f in m["files"] if _bucket_of(f) in changed_buckets]
+            if not files:
                 return self.spark.createDataFrame([], self.desc.schema())
-            return (
-                self.spark.read.option("basePath", str(self.data_path))
-                .parquet(*paths)
-                .drop(_BUCKET_COL)
-            )
+            return self._read(files)
 
-        old = _read(m_old).select(
+        old = changed(m_old).select(
             *dims,
             F.col(var).alias("old_value"),
             F.lit(True).alias("_has_old"),
         )
-        new = _read(m_new).select(
+        new = changed(m_new).select(
             *dims,
             F.col(var).alias("new_value"),
             F.lit(True).alias("_has_new"),
@@ -506,14 +498,11 @@ class GridStore:
         shutil.rmtree(staging)
         return moved
 
-    def write_initial(self, df: DataFrame, dry_run: bool = False) -> None:
+    def write_initial(self, df: DataFrame) -> None:
         """S13: full (re)publish — a fresh manifest referencing only the new
         files; prior versions stay readable until vacuum."""
-        if dry_run:
-            return
         self.meta_path.mkdir(parents=True, exist_ok=True)
-        self._flag_update(True, append_only=False)
-        try:
+        with self._updating(append_only=False):
             obs_df, obs = self._observe_rng(df)
             files = self._stage_files(obs_df)
             if not files:
@@ -525,271 +514,144 @@ class GridStore:
                     "DataFrame?) — refusing to commit an empty manifest"
                 )
             self._commit("initial", files, obs.get)
-        finally:
-            # the in-progress flag must clear even on a failed write —
-            # a stuck True would wedge every later update's guard
-            self._flag_update(False, append_only=False)
 
-    def append(self, df: DataFrame, dry_run: bool = False, max_retries: int = 3) -> None:
+    def append(self, df: DataFrame) -> None:
         """S14: extend along the time dim (update_is_append_only=True).
 
         Commit conflicts auto-resolve, Delta-style: an append's staged
         files stay valid whatever a concurrent writer committed, so losing
         the version race just means re-reading the latest manifest and
-        recombining — the data files are NOT restaged. (An :meth:`insert`
-        can't do this: its rewritten buckets were computed against the
-        snapshot it read, so a racing commit is a true conflict there.)
-        Raises the final commit-conflict StoreError after ``max_retries``
-        losses — pathological contention should be visible, not looped on
-        forever."""
-        if dry_run:
-            return
-        self._flag_update(True, append_only=True)
-        try:
-            m = self.manifest()
-            obs_df, obs = self._observe_rng(df)
-            files = self._stage_files(obs_df)
-            if not files:
-                # empty batch: nothing staged, and obs.get would raise a
-                # bare AssertionError (the metrics never materialize when
-                # the write runs zero tasks). Warn-and-skip like update()'s
-                # zero-leg path — no new version for no data.
-                import warnings
+        recombining — the data files are NOT restaged. Raises the
+        commit-conflict StoreError once the retry budget is spent —
+        pathological contention should be visible, not looped on forever."""
+        self._write(df, (), frozenset(), "append")
 
-                warnings.warn(
-                    "append: input produced no data files (empty DataFrame?) "
-                    "— skipping commit",
-                    stacklevel=2,
-                )
-                return
-            rng = obs.get
-            for attempt in range(max_retries + 1):
-                try:
-                    self._commit(
-                        "append", m["files"] + files, rng, base_version=m["version"]
-                    )
-                    break
-                except StoreError:
-                    if attempt == max_retries:
-                        raise
-                    m = self.manifest()  # re-read the winner's file list
-        finally:
-            self._flag_update(False, append_only=True)
-
-    def insert(self, df: DataFrame, dry_run: bool = False) -> None:
+    def insert(self, df: DataFrame) -> None:
         """S15: overwrite existing time steps in place — only the buckets
-        containing replaced steps are rewritten; untouched rows in those
-        buckets are carried over via an anti-join on the time key. The old
-        bucket files leave the manifest but stay on disk (time travel)."""
-        if dry_run:
-            return
-        update = self._with_bucket(df.select(*self.desc.schema().fieldNames()))
-        # r16: ONE collect serves both the replaced time keys (now a literal
-        # anti predicate in the carry-over rewrite — the key-FRAME form
-        # re-executed its store-scan + distinct subtree inside the staging
-        # write job) and the touched bucket set. Bounded by construction:
-        # an update batch's distinct time steps are small (operators/
-        # updates.py module docstring).
-        pairs = update.select(self.desc.time_dim, _BUCKET_COL).distinct().collect()
+        containing replaced steps are rewritten; their rows at other times
+        are carried over. The old bucket files leave the manifest but stay
+        on disk (time travel). A racing commit is a true conflict: the
+        rewritten buckets were computed against the snapshot this writer
+        read, so it raises instead of retrying (Delta parity)."""
+        # ONE collect serves both the replaced time keys and the touched
+        # bucket set. Bounded by construction: an update batch's distinct
+        # time steps are small (operators/updates.py module docstring).
+        pairs = self._with_bucket(df.select(self.desc.time_dim)).distinct().collect()
         times = sorted({r[0] for r in pairs if r[0] is not None})
-        touched = {r[1] for r in pairs if r[1] is not None}
-        self._rewrite_touched(df, times, touched, action="insert")
+        touched = frozenset(r[1] for r in pairs if r[1] is not None)
+        self._write(df, times, touched, "insert")
 
-    def _rewrite_touched(
+    def _write(
         self,
         df: DataFrame,
-        anti_times,
-        touched: set,
+        replace_times: Sequence[Any],
+        touched: frozenset[str],
         action: str,
         prev_end: Any = None,
     ) -> None:
-        """Shared carry-over pipeline for :meth:`insert` and
-        :meth:`_update_mixed` (they differ only in how ``touched`` /
-        ``anti_times`` are derived, the action label, and ``prev_end``):
-        flag, observe the NEW rows' leg (the manifest's time range / row
-        count describe the update, not the carried-over bucket rows), read
-        the touched bucket files, filter out the replaced times with a
-        literal NOT-IN (``anti_times`` is the bounded collected key list —
-        r16: the key-FRAME broadcast anti-join this replaces re-executed
-        its store-scan + distinct subtree inside the staging write job;
-        NULL-time rows survive, matching left_anti's non-matching-row
-        semantics), union the new leg, stage, and commit untouched +
-        staged against the snapshot's base version. No conflict retry: the
-        rewritten buckets were computed against the snapshot this writer
-        READ — a racing commit is a true conflict the caller must re-plan
-        against (Delta parity)."""
-        td = self.desc.time_dim
-        m = self.manifest()
-        prev = m["files"]
-        touched_paths = [
-            str(self.data_path / f) for f in prev if _bucket_of(f) in touched
-        ]
-        self._flag_update(True, append_only=False)
-        try:
-            new_leg, obs = self._observe_rng(
-                df.select(*self.desc.schema().fieldNames())
-            )
-            if touched_paths:
-                existing = self.spark.read.option(
-                    "basePath", str(self.data_path)
-                ).parquet(*touched_paths)
-                if anti_times:
-                    not_replaced = F.coalesce(
-                        ~F.col(td).isin(list(anti_times)), F.lit(True)
-                    )
-                    keep = existing.filter(not_replaced).drop(_BUCKET_COL)
-                else:
-                    keep = existing.drop(_BUCKET_COL)
-                combined = keep.unionByName(new_leg)
-            else:
-                combined = new_leg
-            files = self._stage_files(combined)
-            if not files:
-                # only reachable for an empty input frame (a non-empty df
-                # stages at least one file, and touched/anti_times derive
-                # from df): skip the commit instead of letting obs.get
-                # raise a bare AssertionError on unmaterialized metrics
-                import warnings
+        """The one staged write + commit behind append, insert and update.
 
+        Reads the ``touched`` buckets' live files, drops their rows at
+        ``replace_times`` with a literal NOT-IN (a bounded key list; NULL-
+        time rows survive, matching left_anti's non-matching-row
+        semantics), unions the new rows, stages the result and commits it
+        with the untouched files against the snapshot's base version. The
+        manifest's time range and row count describe ``df`` alone, observed
+        during the staging write, not the carried-over rows.
+
+        ``prev_end`` overrides ``update_previous_end_date`` (see
+        :meth:`_commit`). A lost version race is retried only when
+        ``touched`` is empty: then the staged files are valid on top of any
+        winner. Rewritten buckets were computed against the snapshot this
+        writer read, so a racing commit there is a true conflict."""
+        td = self.desc.time_dim
+        with self._updating(append_only=action == "append"):
+            m = self.manifest()
+            new, obs = self._observe_rng(df.select(*self.desc.schema().fieldNames()))
+            carried = [f for f in m["files"] if _bucket_of(f) in touched]
+            if carried:
+                keep = self._read(carried)
+                if replace_times:
+                    keep = keep.filter(
+                        F.coalesce(~F.col(td).isin(list(replace_times)), F.lit(True))
+                    )
+                new = keep.unionByName(new)
+            files = self._stage_files(new)
+            if not files:
+                # only reachable for an empty input frame (touched derives
+                # from df): skip the commit instead of letting obs.get raise
+                # a bare AssertionError on metrics that never materialized
                 warnings.warn(
                     f"{action}: input produced no data files (empty "
                     "DataFrame?) — skipping commit",
-                    stacklevel=2,
+                    stacklevel=3,
                 )
                 return
-            untouched = [f for f in prev if _bucket_of(f) not in touched]
-            self._commit(
-                action,
-                untouched + files,
-                obs.get,
-                base_version=m["version"],
-                prev_end=prev_end,
-            )
-        finally:
-            self._flag_update(False, append_only=False)
+            for attempt in range(_APPEND_RETRIES + 1):
+                untouched = [f for f in m["files"] if _bucket_of(f) not in touched]
+                try:
+                    self._commit(
+                        action,
+                        untouched + files,
+                        obs.get,
+                        base_version=m["version"],
+                        prev_end=prev_end,
+                    )
+                    return
+                except StoreError:
+                    if touched or attempt == _APPEND_RETRIES:
+                        raise
+                    m = self.manifest()  # re-read the winner's file list
 
-    def update(self, df: DataFrame, dry_run: bool = False) -> dict[str, int]:
+    def update(self, df: DataFrame) -> dict[str, int]:
         """The parse orchestration (publish.py:265-397 ``update_zarr``):
         split update keys into inserts/appends (J1), run the Q5 guards,
-        honor allow_overwrite (publish.py:287-294), then insert + append.
-        """
+        honor allow_overwrite (publish.py:287-294), then ONE staged write
+        and ONE commit, whatever the mix of legs. The version's action is
+        ``insert``, ``append`` or, for both legs, ``update``.
+
+        NULL-time rows are dropped. ``update_previous_end_date`` is the
+        append leg's max when there is one: with ``cadence_bounds`` set an
+        irregular backfill append can end below an overwritten existing
+        time, and cadence anchoring must read the append leg's end, not the
+        whole batch's."""
         desc = self.desc
         td = desc.time_dim
-        existing_times = self.dataset().select(td).distinct()
-        update_times = df.select(td).distinct()
         val = validate_update(
-            existing_times,
-            update_times,
+            self.dataset().select(td).distinct(),
+            df.select(td).distinct(),
             desc.expected_delta,
             time_dim=td,
             dataset_start=desc.dataset_start_date,
             cadence_bounds=desc.update_cadence_bounds,
-            # the mixed path's touched-bucket set rides the validator's
-            # single aggregation — collecting it separately in
-            # _update_mixed cost one more driver action per update
+            # the touched buckets and replaced times ride the validator's
+            # single aggregation: no second pass over df to route the legs
             insert_bucket_fmt=_BUCKET_FMT[desc.time_bucket],
-            # r16: the insert key TIMES ride the same aggregation, so leg
-            # routing below is a literal predicate on the input frame —
-            # the broadcast semi/anti-joins against the split key frames
-            # re-executed their store-scan + distinct + join subtrees
-            # inside each staging write job. Bounded by construction (an
-            # update batch's distinct steps are small — same argument as
-            # insert_buckets), so the literal IN list stays plan-cheap.
-            collect_insert_times=True,
         )
         if not val.ok:
             raise StoreError("; ".join(val.errors))
-        # Split sizes come from the validation pass — counting the semi/anti
-        # joins here would cost two more driver actions for numbers the
-        # validator's single aggregation already produced.
-        n_ins = val.n_inserts
-        n_app = val.n_appends
+        n_ins, n_app = val.n_inserts, val.n_appends
+        new = df.filter(F.col(td).isNotNull())
+        replace, touched = val.insert_times, val.insert_buckets
         if n_ins and not desc.allow_overwrite:
             # warn-and-skip semantics (publish.py:287-293) — the reference
             # WARNS here (self.warn), and a silent skip is a data-loss
             # footgun for callers who forgot the flag (found driving the
             # library user-style in round 12: an overwrite leg vanished
             # with no signal while the append leg landed)
-            import warnings
-
             warnings.warn(
                 f"update: skipping {n_ins} overwrite key(s) that already exist — "
                 "allow_overwrite is not set on the descriptor; only the append "
                 "leg (if any) will be written",
                 stacklevel=2,
             )
-            n_ins = 0
-            skipped = val.insert_times or ()
-        else:
-            skipped = ()
+            new = new.filter(~F.col(td).isin(list(replace)))
+            n_ins, replace, touched = 0, (), frozenset()
         if not n_ins and not n_app:
             return {"inserts": 0, "appends": 0}
-        # r16 leg routing: the old broadcast semi-joins against the split
-        # key frames were IDENTITY on the pure paths (every non-NULL-time
-        # row of df belongs to the sole leg) apart from dropping
-        # NULL-time rows — which the literal filters below preserve.
-        if not n_ins:
-            # pure append: delegate — keeps the Delta-style conflict retry
-            leg = df.filter(F.col(td).isNotNull())
-            if skipped:
-                leg = leg.filter(~F.col(td).isin(list(skipped)))
-            self.append(leg, dry_run)
-        elif not n_app:
-            self.insert(df.filter(F.col(td).isNotNull()), dry_run)
-        else:
-            # Mixed update: ONE publish cycle (the reference's update_zarr is
-            # a single write + publish, publish.py:265-397), so both legs
-            # stage in one write job and commit one new version — halving the
-            # write/commit round-trips of the old insert-then-append chain.
-            # Conflict semantics follow insert: the rewritten buckets were
-            # computed against this snapshot, so a racing commit is a true
-            # conflict (no retry).
-            self._update_mixed(
-                df,
-                val.insert_times,
-                dry_run,
-                last_append=val.last_append,
-                touched=val.insert_buckets,
-            )
+        action = "update" if n_ins and n_app else "insert" if n_ins else "append"
+        self._write(new, replace, touched, action, prev_end=val.last_append)
         return {"inserts": n_ins, "appends": n_app}
-
-    def _update_mixed(
-        self,
-        df: DataFrame,
-        insert_times,
-        dry_run: bool,
-        last_append: Any = None,
-        touched: frozenset[str] | None = None,
-    ) -> None:
-        """Single staged write + single commit for an insert+append update.
-        Every row of ``df`` is one leg or the other (its distinct times ARE
-        the update key set), so the whole frame is the new-rows leg; only
-        insert-touched buckets need their surviving rows carried over.
-
-        ``update_previous_end_date`` is anchored on ``last_append`` (the
-        append leg's max, from the validator's aggregation) inside the
-        commit's own property write: the commit's observed range spans
-        BOTH legs, and with ``cadence_bounds`` set an irregular backfill
-        append can end below an overwritten existing time — the old
-        insert-then-append sequence left the append leg's max in the
-        property (its commit wrote last), and cadence anchoring must keep
-        reading that, not the whole-batch max. Threading it through
-        ``_commit`` (instead of a second ``set_properties`` after it)
-        removes the crash window where the whole-batch max persisted."""
-        if dry_run:
-            return
-        td = self.desc.time_dim
-        fmt = _BUCKET_FMT[self.desc.time_bucket]
-        if touched is None:
-            # fallback for direct callers: touched buckets derive from the
-            # literal insert key list driver-side (r16 — ``insert_times``
-            # replaced the key FRAME, so no Spark action is needed at
-            # all); the strftime translation mirrors time_sliced's.
-            py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
-            touched = frozenset(t.strftime(py_fmt) for t in insert_times)
-        self._rewrite_touched(
-            df, insert_times, set(touched), action="update", prev_end=last_append
-        )
 
     def compact(self, max_files_per_bucket: int = 1) -> dict[str, int]:
         """Small-file compaction (Delta OPTIMIZE analog). Every append/insert
@@ -812,10 +674,8 @@ class GridStore:
         }
         if not crowded:
             return {}
-        paths = [str(self.data_path / f) for fs in crowded.values() for f in fs]
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
-        self._flag_update(True, append_only=False)
-        try:
+        df = self._read([f for fs in crowded.values() for f in fs])
+        with self._updating(append_only=False):
             obs_df, obs = self._observe_rng(df)
             new_files = self._stage_files(obs_df)
             keep = [f for f in prev if _bucket_of(f) not in crowded]
@@ -823,8 +683,6 @@ class GridStore:
                 "compact", keep + new_files, obs.get, update_props=False,
                 base_version=m["version"],
             )
-        finally:
-            self._flag_update(False, append_only=False)
         return {b: len(fs) for b, fs in crowded.items()}
 
     def vacuum(self, retention: dt.timedelta = dt.timedelta(days=7)) -> int:
@@ -959,10 +817,18 @@ class GridStore:
         encodings[column] = enc
         self.set_properties(column_encodings=encodings)
 
-    def _flag_update(self, in_progress: bool, append_only: bool) -> None:
-        self.set_properties(
-            update_in_progress=in_progress, update_is_append_only=append_only
-        )
+    @contextlib.contextmanager
+    def _updating(self, append_only: bool):
+        """The reference's ``update_in_progress`` flag bracket
+        (publish.py:153-180) around one write. The flag clears even when the
+        write fails — a stuck True would wedge every later update's guard."""
+        self.set_properties(update_in_progress=True, update_is_append_only=append_only)
+        try:
+            yield
+        finally:
+            self.set_properties(
+                update_in_progress=False, update_is_append_only=append_only
+            )
 
     # -- Zarr v2 interop ------------------------------------------------------
 
