@@ -10,9 +10,9 @@ import sys
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import SparkSession
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+from zarr_climate_etl_ipfs_spark.session import get_spark
 
 LATS = [10.0, 20.0, 30.0, 40.0]
 LONS = [100.0, 110.0, 120.0, 130.0]
@@ -32,16 +32,10 @@ _shim_protobuf()
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("zarr-climate-etl-ipfs-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # Spark's own 1g driver heap, not get_spark's 8g: the fixtures are tiny,
+    # and an 8g cap let the suite's JVM grow past 4 GB resident.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    s = get_spark("zarr-climate-etl-ipfs-spark-tests", cpus=4)
     yield s
     s.stop()
 

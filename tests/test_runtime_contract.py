@@ -10,6 +10,7 @@ for its uses) before chasing individual query failures.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,35 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 needs_testdata = pytest.mark.skipif(
     not os.path.exists(f"{SF_DIR}/events.parquet"), reason="driver testdata absent"
 )
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def test_spark_fixture_is_built_with_session_tuning(spark):
+    """The shared fixture is built by session.get_spark, so it carries every
+    TUNING value from its first query on, not only after some catalog
+    query's tune() has reset them. The build-time SparkConf is checked
+    because no later spark.conf.set can change it."""
+    from zarr_climate_etl_ipfs_spark.session import TUNING
+
+    built = spark.sparkContext.getConf()
+    assert {k: built.get(k) for k in TUNING} == TUNING
+    assert {k: spark.conf.get(k) for k in TUNING} == TUNING
+
+
+def test_get_spark_is_the_only_session_builder():
+    """Scripts, examples and tests build their session through
+    session.get_spark; perfbench/ keeps its own harness session."""
+    needle = "SparkSession" ".builder"
+    allowed = {REPO / "zarr_climate_etl_ipfs_spark" / "session.py"}
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in REPO.rglob("*.py")
+        if p not in allowed
+        and p.relative_to(REPO).parts[0] not in {"perfbench", ".git"}
+        and needle in p.read_text(encoding="utf-8", errors="replace")
+    ]
+    assert offenders == []
 
 
 @needs_testdata

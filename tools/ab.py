@@ -1,14 +1,17 @@
-"""Round-16 interleaved Spark/DuckDB catalog harness (verdict #8).
+"""Interleaved Spark/DuckDB timing of catalog queries.
 
-The r15 sessions disagreed on DuckDB totals by ±30% because the two engines
-were measured in separate passes, so host drift lands on one engine's side
-of the ratio. Here the engines ALTERNATE per query rep inside one process
+Timing two engines in separate passes lets host drift land on one side of
+the ratio. Here the engines ALTERNATE per query rep inside one process
 (spark, duck, spark, duck, ...), so drift hits both engines equally and the
-per-query min ratio is robust.
+per-query min ratio is robust. Each query also records the `plan_sha` of its
+executed Spark plan (bench.plan_fingerprint), so a moved number can be told
+apart from a changed plan.
 
-Usage: python tools/interleave_catalog_r16.py [--all] [--runs N] [--out F]
-  --all   full catalog (default: the bench.py headline 34)
-Writes the JSON artifact (default BENCH_interleave_r16_catalog.json).
+Usage: python tools/ab.py [--queries a,b,...] [--all] [--runs N] [--out F]
+  --queries  comma-separated catalog names (default: bench.py's HEADLINE)
+  --all      every catalog query with an oracle
+Prints one row per query, then the full JSON document (also written to
+--out when given).
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
@@ -26,36 +28,34 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--queries", default=None)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
 
     import duckdb
-    from pyspark.sql import SparkSession
 
+    from bench import HEADLINE, plan_fingerprint
+    from tools.check import TABLES
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("interleave_catalog")
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus))))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    if args.all:
+        names = [k for k, q in REGISTRY.items() if q.oracle]
+    elif args.queries:
+        names = args.queries.split(",")
+        unknown = [k for k in names if k not in REGISTRY or not REGISTRY[k].oracle]
+        if unknown:
+            ap.error(f"not a catalog query with an oracle: {', '.join(unknown)}")
+    else:
+        names = [k for k in HEADLINE if k in REGISTRY and REGISTRY[k].oracle]
+
+    spark = get_spark("ab")
     con = duckdb.connect()
-    for tname in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for tname in TABLES:
         p = f"{sf_dir}/{tname}.parquet"
         if Path(p).exists():
             con.execute(f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')")
@@ -63,25 +63,20 @@ def main() -> None:
     REGISTRY["pricing_summary"].fn(spark, sf_dir).collect()  # warm spark
     con.execute(REGISTRY["pricing_summary"].oracle).fetchall()  # warm duck
 
-    if args.all:
-        selected = {k: q for k, q in REGISTRY.items() if q.oracle}
-    else:
-        # headline list lives in bench.py's main(); re-derive it from source
-        src = Path(__file__).resolve().parent.parent / "bench.py"
-        names = re.findall(r'^\s+"([a-z0-9_]+)",\s*$', src.read_text(), re.M)
-        selected = {k: REGISTRY[k] for k in names if k in REGISTRY and REGISTRY[k].oracle}
-
     out: dict = {"sf_dir": sf_dir, "runs": args.runs, "interleaved": True, "queries": {}}
-    for name, qd in selected.items():
+    for name in names:
+        qd = REGISTRY[name]
         s_times: list[float] = []
         d_times: list[float] = []
-        err = None
+        sha = err = None
         for _ in range(args.runs):
             try:
-                spark.sparkContext.setJobDescription(f"interleave: {name}")
+                spark.sparkContext.setJobDescription(f"ab: {name}")
                 t0 = time.perf_counter()
-                len(qd.fn(spark, sf_dir).collect())
+                df = qd.fn(spark, sf_dir)
+                len(df.collect())
                 s_times.append(time.perf_counter() - t0)
+                sha = sha or plan_fingerprint(df)
                 t0 = time.perf_counter()
                 con.execute(qd.oracle).fetchall()
                 d_times.append(time.perf_counter() - t0)
@@ -91,6 +86,7 @@ def main() -> None:
         row: dict = {}
         if s_times:
             row["spark"] = round(min(s_times), 4)
+            row["plan_sha"] = sha
         if d_times:
             row["duckdb"] = round(min(d_times), 4)
             if s_times:
@@ -104,9 +100,11 @@ def main() -> None:
     out["spark_total"] = round(sp, 4)
     out["duckdb_total"] = round(du, 4)
     out["ratio_total"] = round(sp / du, 4) if du else None
-    dest = args.out or "BENCH_interleave_r16_catalog.json"
-    Path(dest).write_text(json.dumps(out, indent=1) + "\n")
-    print(json.dumps({k: out[k] for k in ("spark_total", "duckdb_total", "ratio_total")}))
+    doc = json.dumps(out, indent=1) + "\n"
+    if args.out:
+        Path(args.out).write_text(doc)
+    print(doc, end="")
+    spark.stop()
 
 
 if __name__ == "__main__":

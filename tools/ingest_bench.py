@@ -5,9 +5,9 @@ machine" for a full CHIRPS US 0.25° parse (~8.6B cells, README.md:55).
 This harness generates synthetic NetCDF3 and GRIB2 files with this repo's
 own writers, ingests them through the production path
 (`read_binary_gridded`: binaryFile scan → Arrow mapInPandas decode → tall
-rows), and reports cells/second on local[32] — the number that, divided
-into a corpus's cell count, estimates the wall-clock of a full parse at a
-given cluster width.
+rows), and reports cells/second on the session.get_spark session — the
+number that, divided into a corpus's cell count, estimates the wall-clock of
+a full parse at a given cluster width.
 
 Usage: python tools/ingest_bench.py [n_files] [timesteps] [ny] [nx]
 """
@@ -33,8 +33,6 @@ def main() -> None:
     ny = int(sys.argv[3]) if len(sys.argv) > 3 else 100
     nx = int(sys.argv[4]) if len(sys.argv) > 4 else 100
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
     from zarr_climate_etl_ipfs_spark.sources.grib2 import (
         GRIB2Message,
@@ -46,6 +44,7 @@ def main() -> None:
         netcdf3_decoder,
         write_netcdf3,
     )
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
     desc = DatasetDescriptor(
         dataset_name="ingest_bench", data_var="precip", time_resolution="daily"
@@ -90,16 +89,7 @@ def main() -> None:
         )
     gen_s = time.perf_counter() - t0
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ingest-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("ingest-bench")
 
     out = {}
     for fmt, sub, cells, dec in (

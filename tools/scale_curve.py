@@ -4,7 +4,8 @@ Builds dup-heavy corpora at 1x/10x/100x of sf0.1's documents table
 (5k -> 50k -> 500k rows; copies carry a deterministic mutation on half the
 docs so the corpus mixes exact dups, near dups and unique text), runs the
 shipped catalog queries unchanged (REGISTRY entries), and records runtime,
-shuffle-write bytes and output rows per point from the Spark UI REST API.
+shuffle-write bytes (from Spark's in-process status store) and output rows
+per point.
 
 Usage: python tools/scale_curve.py [out_md]
 Writes SCALE.md at the repo root by default.
@@ -17,7 +18,6 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -25,7 +25,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 BASE = Path("/root/testdata/sf0.1/documents.parquet")
 EMB_BASE = Path("/root/testdata/sf0.1/embeddings.parquet")
 WORK = Path("/tmp/scale_curve")
-UI_PORT = 4061
 
 QUERIES = [
     "dedup_exact",
@@ -238,34 +237,30 @@ def build_emb_corpora(dirs: dict[str, Path]) -> None:
         writer.close()
 
 
-def shuffle_write_bytes(app_id: str) -> int:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+def stage_shuffle_writes(spark) -> dict[int, int]:
+    """stage id -> shuffle-write bytes for every stage in the in-process
+    status store (the store the UI reads; it is kept with the UI off)."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    return {
+        s.stageId(): s.shuffleWriteBytes()
+        for s in (stages.apply(i) for i in range(stages.size()))
+    }
 
 
 def main() -> None:
     out_md = Path(sys.argv[1]) if len(sys.argv) > 1 else Path(__file__).parent.parent / "SCALE.md"
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
     dirs = build_corpora()
     build_emb_corpora(dirs)
     build_events_corpora(dirs)
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale-curve")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
+    spark = get_spark("scale-curve")
     # warm
     REGISTRY["dedup_exact"].fn(spark, str(dirs["x1"])).collect()
 
@@ -288,18 +283,21 @@ def main() -> None:
             best = float("inf")
             n = sw = 0
             for rep in range(n_runs):
-                sw0 = shuffle_write_bytes(app_id)
+                seen = max(stage_shuffle_writes(spark), default=-1)
                 t0 = time.perf_counter()
                 n = len(runners[qname](spark, sf_dir).collect())
                 t = time.perf_counter() - t0
                 if rep == 0:
-                    sw = shuffle_write_bytes(app_id) - sw0
+                    # keyed on stage ids, not a running total: the store
+                    # evicts stages past spark.ui.retainedStages
+                    sw = sum(b for i, b in stage_shuffle_writes(spark).items() if i > seen)
                 best = min(best, t)
             results[qname][label] = {"sec": round(best, 2), "shuffle_mb": round(sw / 1e6, 1), "rows": n}
             print(f"{label:5s} {qname:38s} {best:8.2f}s  shuffle={sw/1e6:9.1f} MB  rows={n}", flush=True)
+    master = spark.sparkContext.master
     spark.stop()
     print(json.dumps(results))
-    write_md(out_md, results)
+    write_md(out_md, results, master)
 
 
 def _cell(results: dict, qname: str, key: str, scale: str = "x100"):
@@ -332,7 +330,7 @@ def _table(results: dict, names: list[str]) -> list[str]:
     return lines
 
 
-def write_md(out_md: Path, results: dict) -> None:
+def write_md(out_md: Path, results: dict, master: str) -> None:
     lines = [
         "# SCALE — dedup + similarity scale curves (round 7)",
         "",
@@ -352,11 +350,11 @@ def write_md(out_md: Path, results: dict) -> None:
         "two bracketed production scale modes (operator defaults the pinned",
         "catalog entries can't use because their oracles need fixed",
         "parameters).",
-        "Runtime = min over full runs, local[32] (the host shows multi-second",
-        "contention spikes; shuffle bytes are run-invariant and come from the",
-        "Spark UI REST API — sum of completed stages' shuffleWriteBytes, delta",
-        "per query). Reproduce: `python tools/scale_curve.py` (run twice, take",
-        "per-cell min).",
+        f"Runtime = min over full runs, {master} (the host shows multi-second",
+        "contention spikes; shuffle bytes are run-invariant and come from",
+        "Spark's in-process status store — sum of shuffleWriteBytes over the",
+        "stages each query ran). Reproduce: `python tools/scale_curve.py`",
+        "(SCALE_RUNS runs per cell, default 2, min taken).",
         "",
         "## Text dedup family (5k → 50k → 500k docs)",
         "",

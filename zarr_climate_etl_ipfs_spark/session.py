@@ -33,18 +33,24 @@ TUNING: dict[str, str] = {
 
 
 def get_spark(app_name: str = "zarr-climate-etl-ipfs-spark", cpus: int | None = None) -> SparkSession:
-    """Build a tuned local session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or '*'."""
+    """Build a tuned local session: every TUNING value, no UI, ERROR logging.
+
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or '*'; driver memory to
+    $SPARK_DRIVER_MEMORY or 8g. Every script, example and test fixture builds
+    its session here."""
     n = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in TUNING.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def tune(spark: SparkSession) -> SparkSession:
